@@ -20,10 +20,10 @@ import org.apache.spark.sql.SparkSession
   * timing per declared query (headline included, measured on the same
   * uniform basis), so regressions in the non-headline tail are
   * machine-diffable round over round (the SCALING.md audit, emitted by
-  * the artifact instead of hand-refreshed). SPARK_GRAFT_BENCH_ALL
-  * promotes every all_queries entry to warm best-of-3 (slow, dev
-  * audit); SPARK_GRAFT_BENCH_HEADLINE_ONLY skips the map for quick
-  * loops.
+  * the artifact instead of hand-refreshed), and `shared_build`: one
+  * timing per one-time index build in [[Registry.sharedBuilds]].
+  * SPARK_GRAFT_BENCH_HEADLINE_ONLY skips both for quick loops;
+  * SPARK_GRAFT_BENCH_QUERIES=a,b restricts the per-query map.
   */
 object Bench {
   /** Headline metrics — keep names identical to BASELINE.md rows. */
@@ -99,65 +99,22 @@ object Bench {
     // first run exactly as a real session would; the reported min is the
     // steady-state query cost. SPARK_GRAFT_BENCH_SINGLESHOT restores the
     // cheap one-pass map for quick dev loops.
-    // The memoized l6 near-dup chain (shared by l6_simjoin /
-    // l6_dedup_docs / l8_cluster_sample / l0_pipeline) builds once per
-    // session, so per-query warm best-of-3 reports steady-state cost
-    // with the build paid during a warm-up pass. Surface the build as
-    // its own artifact field — a one-time cost a cluster deployment
-    // schedules like an index build must stay visible, not vanish into
-    // an unreported warm-up.
-    def timedBuild(label: String)(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try { body; (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $label build failed: ${e.getMessage}")
-        -1.0
+    // The one-time index builds the queries share (Registry.sharedBuilds)
+    // are memoized per session, so per-query warm best-of-3 reports
+    // steady-state cost with the builds paid before the map. Surface each
+    // build as its own artifact field — a one-time cost a cluster
+    // deployment schedules like an index build must stay visible, not
+    // vanish into an unreported warm-up.
+    val sharedBuild =
+      if (headlineOnly) Nil
+      else Registry.sharedBuilds.map { case (label, build) =>
+        val t0 = System.nanoTime()
+        label -> (try { build(spark, sfDir); (System.nanoTime() - t0) / 1e9 }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $label build failed: ${e.getMessage}")
+          -1.0
+        })
       }
-    }
-    val sharedBuild: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("l6 chain") {
-        graft.operators.Dedup.l6DedupDocs(spark, sfDir).count() }
-    // the catalog's exact ANALYZE pass: memoized per session (s7_profile
-    // and the approx gate's acceptance band both consume it), so its
-    // one-time cost must surface here — warm per-query minima would
-    // otherwise hide it entirely
-    val s7Build: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("s7 exact profile") {
-        graft.operators.Profile.s7Profile(spark, sfDir).count() }
-    // the HLL++ sketch catalog: memoized per session like the exact pass
-    // (its warm declared-query cost is the ~50-row read, not the sweep)
-    val s7ApproxBuild: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("s7 approx sketch") {
-        graft.operators.Profile.s7ProfileApprox(spark, sfDir).count() }
-    // the corpus BM25 table: memoized per session (l4_bm25, m3_mrr and
-    // m5_ndcg all consume it) — an index build, surfaced like the others
-    val bm25Build: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("bm25 table") {
-        graft.operators.TextOps.defaultBm25(spark, sfDir).count() }
-    // the PQ codebooks (joint Lloyd chain): memoized per session like the
-    // IVF centroids — an index build a deployment schedules once
-    val pqBuild: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("pq codebooks") {
-        graft.operators.Similarity.defaultPqBooks(Tables(spark, sfDir)).count() }
-    // the NB classifier train+score frame: memoized per session
-    // (l4_quality_classifier, m7_calibration, m7_confusion all consume
-    // it) — a model training a deployment schedules once
-    val nbBuild: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("nb classifier") {
-        graft.operators.TextOps.defaultNbScored(spark, sfDir).count() }
-    // the decontamination bloom filter: built once per benchmark and
-    // memoized per session (l9_bloom_decontam consumes it) — an index
-    // build like the PQ codebooks, surfaced the same way
-    val bloomBuild: Double =
-      if (headlineOnly) -1.0
-      else timedBuild("bloom filter") {
-        graft.operators.Curation.defaultBloomBuild(spark, sfDir) }
     val tail = qs.keys.toSeq.sorted.filterNot(headline.contains)
     // SPARK_GRAFT_BENCH_QUERIES=a,b,c restricts the per-query map — dev
     // loop for timing one query's change without a full pass
@@ -184,7 +141,7 @@ object Bench {
     val total = if (results.exists(_._2 < 0)) -1.0 else results.map(_._2).sum
     val allJson =
       if (headlineOnly) ""
-      else s""","shared_build":{"l6_chain":${fmt(sharedBuild)},"s7_exact_profile":${fmt(s7Build)},"s7_approx_sketch":${fmt(s7ApproxBuild)},"bm25":${fmt(bm25Build)},"pq_books":${fmt(pqBuild)},"nb_classifier":${fmt(nbBuild)},"bloom_filter":${fmt(bloomBuild)}},"all_queries":${toJson(allResults.sortBy(_._1))}"""
+      else s""","shared_build":${toJson(sharedBuild)},"all_queries":${toJson(allResults.sortBy(_._1))}"""
     // contention evidence: ambient load at both ends plus this JVM's own
     // cpu-vs-wall split — a reader can discount an inflated artifact
     // (load ≫ cores in use, or wall ≫ cpu/cores) without re-running it

@@ -44,17 +44,8 @@ object Engine {
       // writer: at production shuffle.partitions (≫ the 200-partition
       // bypass threshold) the sort writer is what runs anyway, so the
       // default-200 bypass only ever engaged in small local runs.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "1"))
-      // Local default only (a cluster sets its fast local disks via
-      // spark-submit / spark-defaults): shuffle + spill files on the
-      // sandbox's root disk pay a real file-create/write cost per block;
-      // tmpfs removes it (a further ~15% on the shuffle-bound loop
-      // above). Guarded so environments without a writable /dev/shm fall
-      // back to the JVM tmpdir unchanged.
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        if (new java.io.File("/dev/shm").canWrite) "/dev/shm/graft-spark-local"
-        else sys.props("java.io.tmpdir")))
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+      .config("spark.local.dir", localDir)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -73,6 +64,24 @@ object Engine {
 
   def defaultCores: Int =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  private val MinShmBytes = 2L << 30
+
+  /** Local scratch root for shuffle/spill files (`spark.local.dir`) and
+    * [[graft.sources.BatchIO]]'s staging trees. Local default only (a
+    * cluster sets its fast local disks via spark-submit /
+    * spark-defaults): files on a root disk pay a real file-create/write
+    * cost per block, and tmpfs removes it (~15% on the shuffle-bound
+    * pagerank loop). `/dev/shm` is chosen only when writable with at
+    * least [[MinShmBytes]] usable — a container's default 64 MB shm
+    * would fill on the first large shuffle — else the JVM tmpdir.
+    * `SPARK_GRAFT_LOCAL_DIR` overrides the choice.
+    */
+  val localDir: String = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.canWrite && shm.getUsableSpace >= MinShmBytes) "/dev/shm/graft-spark-local"
+    else sys.props("java.io.tmpdir")
+  })
 
   /** Parallelism FLOOR for CPU-bound per-row stages (codec decode,
     * signature/hash kernels, exact-decimal math, regex chains): when
@@ -102,9 +111,7 @@ object Engine {
     // memoized per (session, canonical plan) — deterministic inputs
     // (parquet-rooted frames over an immutable fixture dir) make the
     // count a pure function of the plan
-    val n = FloorPartsCache.getOrElseUpdate(df.sparkSession,
-      df.queryExecution.analyzed.canonicalized)(df.rdd.getNumPartitions)
-    if (n < target) df.repartition(target) else df
+    if (plannedPartitions(df) < target) df.repartition(target) else df
   }
 
   /** [[parallelFloor]] with HASH partitioning on a deterministic key —
@@ -115,9 +122,18 @@ object Engine {
     */
   def parallelFloorBy(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val n = FloorPartsCache.getOrElseUpdate(df.sparkSession,
-      df.queryExecution.analyzed.canonicalized)(df.rdd.getNumPartitions)
-    if (n < target) df.repartition(target, key) else df
+    if (plannedPartitions(df) < target) df.repartition(target, key) else df
+  }
+
+  /** A plan over a checkpoint (a `LogicalRDD` leaf) is not memoized: each
+    * checkpoint mints a new leaf, so its key would never hit again and
+    * the entry would keep the checkpoint's RDD alive.
+    */
+  private def plannedPartitions(df: DataFrame): Int = {
+    val plan = df.queryExecution.analyzed.canonicalized
+    if (plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]))
+      df.rdd.getNumPartitions
+    else FloorPartsCache.getOrElseUpdate(df.sparkSession, plan)(df.rdd.getNumPartitions)
   }
 
   private val FloorPartsCache = new SessionCache[

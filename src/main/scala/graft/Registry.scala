@@ -3617,7 +3617,7 @@ object Registry {
     * l0_pipeline/l6DedupDocs discipline generalized to the declared
     * queries whose frame CONSTRUCTION is analysis-dominated: Spark's
     * eager per-op Catalyst analysis costs 0.2–0.6 s per invocation on
-    * these trees (ConstructProbe, warm pass), paid again on every
+    * these trees (measured warm at sf0.1), paid again on every
     * re-declaration of an identical query. The memo caches the PLAN, not
     * results: every action on the returned frame still computes from the
     * parquet inputs (plus the session's established persist/checkpoint
@@ -3626,7 +3626,10 @@ object Registry {
     * drain snapshot (s2_admission), the file-roundtrip writers (s6_*),
     * and the iterative forms whose loop actions produce checkpointed
     * score/label frames (g1_*, g3, l1_substr_dedup_fix) — so each of
-    * those still re-executes its real work per invocation.
+    * those still re-executes its real work per invocation. Construction-
+    * time pins of REFERENCE rows are memoized on purpose:
+    * `l8_importance_gate` materializes its reference-corpus LM once at
+    * construction, and the memo reuses that pin.
     */
   private val FrameMemo = new graft.SessionCache[String, org.apache.spark.sql.DataFrame]
   private val MemoFrames: Set[String] = Set(
@@ -3646,6 +3649,24 @@ object Registry {
         else d.fn
       d.name -> fn
     }.toMap
+
+  /** The one-time index builds the declared queries share, by artifact
+    * name: each fills a `(session, dir)`-keyed [[graft.SessionCache]]
+    * memo that later query runs read. `graft.Bench` times each into its
+    * `shared_build` map in this order.
+    */
+  val sharedBuilds: Seq[(String, (org.apache.spark.sql.SparkSession, String) => Unit)] = Seq(
+    ("l6_chain", (s, d) => Dedup.l6DedupDocs(s, d).count()),
+    ("s7_exact_profile", (s, d) => Profile.s7Profile(s, d).count()),
+    ("s7_approx_sketch", (s, d) => Profile.s7ProfileApprox(s, d).count()),
+    ("bm25", (s, d) => TextOps.defaultBm25(s, d).count()),
+    ("pq_books", (s, d) => Similarity.defaultPqBooks(Tables(s, d)).count()),
+    ("nb_classifier", (s, d) => TextOps.defaultNbScored(s, d).count()),
+    ("bloom_filter", (s, d) => Curation.bloomFilterFor(
+      Curation.l9SplitDocs(s, d).filter(org.apache.spark.sql.functions.col("split") === "test"),
+      "text", Curation.DecontamN)),
+    ("ivf_centroids", (s, d) => Similarity.defaultCentroids(s, d).count()),
+    ("bpe_train", (s, d) => TextOps.defaultBpeTrain(s, d)))
 
   // NOTE: no whitespace collapsing here — it would rewrite spacing inside
   // quoted SQL literals; Verify's JSON escaping already handles newlines.

@@ -754,22 +754,13 @@ object Curation {
     * detail shifts the digest and fails the hash gate.
     */
   /** The declared split-tagged documents frame shared by the l9 family
-    * and the Bench build trigger (the frames must be CONSTRUCTED
-    * identically for the bloom build memo's canonical-plan key to hit).
+    * and the `bloom_filter` shared build ([[graft.Registry.sharedBuilds]];
+    * the frames must be CONSTRUCTED identically for the bloom build
+    * memo's canonical-plan key to hit).
     */
   private[graft] def l9SplitDocs(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir).documents.select(col("doc_id"), col("source"),
       col("text"), splitExpr(col("doc_id")).as("split"))
-
-  /** Bench hook: force the memoized bloom-filter build for the declared
-    * benchmark (the test split) so its one-time cost surfaces as a
-    * `shared_build` entry instead of hiding in warm-up.
-    */
-  private[graft] def defaultBloomBuild(spark: SparkSession, dir: String): Unit = {
-    bloomFilterFor(l9SplitDocs(spark, dir).filter(col("split") === "test"),
-      "text", DecontamN)
-    ()
-  }
 
   def l9BloomDecontam(spark: SparkSession, dir: String): DataFrame = {
     val docs = l9SplitDocs(spark, dir)

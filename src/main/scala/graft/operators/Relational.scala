@@ -535,14 +535,13 @@ object Relational {
     * row_number pass inside the group exchange, pick the two rows, and
     * interpolate with EXACTLY Spark's arithmetic —
     * `(⌈pos⌉−pos)·lo + (pos−⌊pos⌋)·hi`, lo when pos is integral —
-    * reproduced bit-for-bit (PctProbe verified 18/18 group×p cases at
-    * three SFs against expr("percentile"); RelationalSpec pins it).
+    * reproduced bit-for-bit (RelationalSpec's a6 witness test pins it
+    * against expr("percentile")).
     *
     * Null discipline: values are filtered before ranking and counted
-    * with count(v), matching percentile's ignore-nulls. Groups with
-    * n = 0 would drop out rather than yield NULL — impossible for the
-    * fixture measures, and the pinned object-agg forms keep the
-    * original semantics on record.
+    * with count(v), matching percentile's ignore-nulls. A group with
+    * n = 0 has no row here; callers LEFT-join the result so such a
+    * group keeps its row with a NULL percentile, as `percentile` does.
     *
     * Returns (g, __pct0, __pct1, ...) one row per group with ≥1 value.
     */
@@ -595,7 +594,7 @@ object Relational {
     val stats = base.groupBy(col("l_returnflag"))
       .agg(round(stddev_samp(col("l_quantity")), 4).as("sd_qty"),
         round(corr(col("l_quantity"), col("l_extendedprice")), 4).as("corr_qty_price"))
-    stats.join(broadcast(med), Seq("l_returnflag"))
+    stats.join(broadcast(med), Seq("l_returnflag"), "left")
       .select(col("l_returnflag"), round(col("__pct0"), 4).as("median_price"),
         col("sd_qty"), col("corr_qty_price"))
       .orderBy(col("l_returnflag"))
@@ -672,15 +671,15 @@ object Relational {
     // the other half of the same agg as a full per-group value buffer
     // (`percentile(col, array(0.5, 0.95))`) — now comes from
     // [[rankPercentiles]]'s codegen passes and broadcast-joins back
-    // (3-row frames). Same values bit-for-bit: PctProbe/RelationalSpec
-    // pin the rank interpolation against the object aggregate.
+    // (3-row frames). Same values bit-for-bit: RelationalSpec pins the
+    // rank interpolation against the object aggregate.
     val base = t.lineitem.select(col("l_returnflag"), col("l_extendedprice"))
     val ex = rankPercentiles(base, "l_returnflag", "l_extendedprice", Seq(0.5, 0.95))
     base
       .groupBy(col("l_returnflag"))
       .agg(percentile_approx(col("l_extendedprice"),
         array(lit(0.5), lit(0.95)), lit(10000)).as("__ap"))
-      .join(broadcast(ex), Seq("l_returnflag"))
+      .join(broadcast(ex), Seq("l_returnflag"), "left")
       .select(col("l_returnflag"),
         round(col("__pct0"), 4).as("median_price"),
         round(col("__pct1"), 4).as("p95_price"),

@@ -750,19 +750,8 @@ object Similarity {
     CentroidCache.getOrElseUpdate(spark, (dir, nCells))(
       trainedCentroids(Tables(spark, dir).embeddings, nCells))
 
-  /** Drop every memoized per-session frame ([[defaultCentroids]],
-    * [[embeddingCount]]). The caches assume a corpus dir is IMMUTABLE
-    * within a session — the parquet-lake posture every reader here takes
-    * — so a caller that rewrites a fixture dir in place mid-session must
-    * invalidate explicitly or stale centroids/counts are served
-    * (spec-pinned in LlmOpsSpec).
-    */
-  def invalidateSessionCaches(): Unit = {
-    CentroidCache.clear()
-    CorpusCountCache.clear()
-    PqBooksCache.clear()
-    BatchQueryCache.clear()
-  }
+  /** Drop every session memo in the engine ([[graft.SessionCache.clear]]). */
+  def invalidateSessionCaches(): Unit = graft.SessionCache.clear()
 
   /** Semantic-dedup cosine threshold for the declared query. Real
     * corpora run SemDeDup-style pruning at τ ≈ 0.95+ (embeddings of
@@ -806,8 +795,7 @@ object Similarity {
   /** Corpus row count memoized per (session, dir) — one metadata-cheap
     * count job per session feeds every [[semCellsFor]] call (Verify and
     * Bench invoke the declared query repeatedly). Same immutable-corpus
-    * assumption as [[CentroidCache]]; [[invalidateSessionCaches]] clears
-    * both.
+    * assumption as [[CentroidCache]].
     */
   private val CorpusCountCache = new graft.SessionCache[String, Long]
 
@@ -957,7 +945,7 @@ object Similarity {
     * re-training the joint Lloyd chain per `l3_pq_topk` execution would
     * charge the build once per query. Cached frame == what the
     * un-memoized call computes (the final Lloyd round is already
-    * materialized); [[invalidateSessionCaches]] clears it.
+    * materialized).
     */
   private val PqBooksCache =
     new graft.SessionCache[(String, Int, Int), DataFrame]
@@ -1049,7 +1037,7 @@ object Similarity {
     */
   private val PqBookRowsCache = new graft.SessionCache[
     (String, Int, Int), Map[Int, IndexedSeq[(Long, Seq[Double])]]]
-  private def collectedPqBooks(t: Tables): Map[Int, IndexedSeq[(Long, Seq[Double])]] =
+  private[graft] def collectedPqBooks(t: Tables): Map[Int, IndexedSeq[(Long, Seq[Double])]] =
     PqBookRowsCache.getOrElseUpdate(t.spark, (t.dir, PqM, PqK)) {
       defaultPqBooks(t).select(col("sub"), col("cid"), col("ce")).collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
@@ -1228,8 +1216,7 @@ object Similarity {
     * per (session, dir, ids) — bounded query metadata over an immutable
     * corpus dir, the [[defaultCentroids]] discipline — so a serving/eval
     * session re-ranking against the same query batch pays the id-probe
-    * scan once, not once per execution; [[invalidateSessionCaches]]
-    * clears it with the rest.
+    * scan once, not once per execution.
     */
   private val BatchQueryCache =
     new graft.SessionCache[(String, Seq[Long]), Array[org.apache.spark.sql.Row]]

@@ -43,16 +43,9 @@ object BatchIO {
     }
   }
 
-  // Staging root follows the engine's fast-local-dir choice (see
-  // Engine.session's spark.local.dir note): the roundtrip files are
-  // per-process scratch, and /tmp on the sandbox's root disk pays a real
-  // create/write cost per part file. Env-overridable, tmpdir fallback.
-  private val stageRoot = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-    if (new java.io.File("/dev/shm").canWrite) "/dev/shm/graft-spark-local"
-    else sys.props("java.io.tmpdir"))
-
   private def stage(dir: String, fmt: String): String = {
-    val d = s"$stageRoot/graft_s6_${fmt}_${Integer.toHexString(dir.hashCode)}_$runToken"
+    // per-process scratch: it goes where the engine's shuffle files go
+    val d = s"${graft.Engine.localDir}/graft_s6_${fmt}_${Integer.toHexString(dir.hashCode)}_$runToken"
     staged.add(d)
     d
   }

@@ -2481,7 +2481,7 @@ class LlmOpsSpec extends SparkSuite {
       df.collect().map(_.toSeq.toList).sortBy(_.toString).toList
     val fresh = rows(TextOps.bm25Frame(tables.documents))
     assert(rows(TextOps.defaultBm25(spark, sf)) == fresh, "cached != recompute")
-    TextOps.invalidateSessionCache()
+    SessionCache.clear()
     assert(rows(TextOps.defaultBm25(spark, sf)) == fresh, "post-invalidation != recompute")
   }
 

@@ -34,10 +34,21 @@ class RelationalSpec extends SparkSuite {
   }
 
   test("a6 rank-percentile forms == object-aggregate forms, value-identical") {
-    assertSameRows(Relational.a6Stats(spark, sf),
-      Relational.a6StatsObjectAggForm(spark, sf))
-    assertSameRows(Relational.a6StatsApproxChecked(spark, sf),
-      Relational.a6StatsApproxObjectAggForm(spark, sf))
+    // second input: the fixture lineitem plus a 'Z' group whose measure
+    // is all NULL — both forms must keep that group's row, NULL median
+    val nullDir = java.nio.file.Files.createTempDirectory("graft-a6null").toString
+    val li = tables.lineitem
+    li.union(li.limit(3).withColumn("l_returnflag", lit("Z"))
+        .withColumn("l_extendedprice", lit(null).cast(li.schema("l_extendedprice").dataType)))
+      .write.parquet(s"$nullDir/lineitem.parquet")
+    for (dir <- Seq(sf, nullDir)) {
+      assertSameRows(Relational.a6Stats(spark, dir),
+        Relational.a6StatsObjectAggForm(spark, dir))
+      assertSameRows(Relational.a6StatsApproxChecked(spark, dir),
+        Relational.a6StatsApproxObjectAggForm(spark, dir))
+    }
+    val z = Relational.a6Stats(spark, nullDir).filter(col("l_returnflag") === "Z").collect()
+    assert(z.length == 1 && z.head.isNullAt(z.head.fieldIndex("median_price")))
     // bit-exactness of the UNROUNDED interpolation against Spark's
     // percentile object aggregate, both probed quantiles
     val ref = tables.lineitem.groupBy(col("l_returnflag"))
@@ -109,7 +120,7 @@ class RelationalSpec extends SparkSuite {
       df.collect().map(_.toSeq.toList).toList
     val first = rows(Profile.s7Profile(spark, sf))   // may hit or fill the cache
     assert(rows(Profile.s7Profile(spark, sf)) == first, "cached != first")
-    Profile.invalidateSessionCache()
+    SessionCache.clear()
     assert(rows(Profile.s7Profile(spark, sf)) == first, "recompute != cached")
   }
 

@@ -152,6 +152,15 @@ class StreamingSpec extends SparkSuite {
     MqBroker.deleteTopic(topic); MqAdmission.clear(topic)
   }
 
+  test("S2 admission is deterministic: three drains in one session return identical frames") {
+    def drain(): Seq[String] =
+      graft.streaming.Streams.s2Admission(spark, sf).collect().map(_.mkString(",")).toSeq
+    val first = drain()
+    assert(first.nonEmpty)
+    assert(drain() == first)
+    assert(drain() == first)
+  }
+
   test("S2e drain property: engine policy == oracle-stage replay over randomized backlogs") {
     import graft.sources.{MqAdmission, MqBroker}
     // Independent replica of the Registry s2_admission oracle's unrolled
